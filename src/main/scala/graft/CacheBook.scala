@@ -6,46 +6,46 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lifecycle registry for memoized/persisted relations.
   *
-  * Several query families memoize expensive relations per (session,
-  * corpus) — the dedup shingle/pair/label stack, the shared customer
-  * slice, the similarity bucketed table. Memoization is what makes a
-  * family of related queries pay the build once, but a cache with no
+  * Query families memoize expensive builds per (session, corpus) — the
+  * dedup shingle/band stack, the IVF/PQ index, the customer slice — so a
+  * family of related queries pays the build once. A cache with no
   * release is an executor-memory leak across corpora in a long-lived
-  * session (and in the bench itself, which runs every query in one JVM:
-  * the block store only grows through the run, and the pressure taxes
-  * every later query).
+  * session, so every such build registers a release thunk here under a
+  * SCOPE (the query-family prefix: "d", "s", "slice", "x", "q", "m").
+  * [[Bench]] releases each scope once its last consumer family has run;
+  * any caller can [[releaseAll]] between corpora.
   *
-  * Every site that persists or checkpoints a long-lived relation
-  * registers a release thunk here under a SCOPE (the query-family
-  * prefix: "d", "s", "slice", "x"). [[Bench]] releases each scope as
-  * soon as its last consumer family has run; any caller can
-  * [[releaseAll]] between corpora. Thunks both unpersist the blocks AND
-  * evict the owning memo-map entry, so a later call rebuilds from
-  * source instead of recomputing through a dead checkpoint (an
-  * unpersisted localCheckpoint has no lineage to recompute from —
-  * a stale handle would fail, not just slow down).
+  * [[memo]] is the ONLY way to add a family memo (state that stays warm
+  * across query invocations); [[memoCheckpoint]] is its DataFrame form
+  * for the dominant policy (record the build plan, eager
+  * `localCheckpoint`, release with [[unpersistCheckpoint]]). One call
+  * names the memo by (scope, name), keys it by the corpus identity it
+  * reads, and owns the whole lifecycle:
   *
-  * NAMED memos + touch tracing (round 12): map-backed memo cells —
-  * state that stays warm ACROSS query invocations — additionally
-  * register under a NAME and report every access via [[touch]]. That
-  * gives the bench two things the scope alone could not:
+  *  - a per-key [[Once]] cell, installed under this object's monitor
+  *    and built outside it — independent keys build concurrently, one
+  *    key builds exactly once, and a throwing build caches nothing and
+  *    the memo registers nothing (the next call retries; registrations
+  *    the build made before it threw stay, under the memo's name);
+  *  - a [[touch]] on every access, hit or miss;
+  *  - the build runs under [[building]], so the build's anonymous
+  *    registrations attach to the memo's name;
+  *  - after a SUCCESSFUL build, a named registration whose thunk first
+  *    evicts the cell and then runs the caller's `release` — a later
+  *    call rebuilds from source instead of reading through a dead
+  *    checkpoint (an unpersisted localCheckpoint has no lineage left to
+  *    recompute from).
   *
-  *  1. a PRECISE warm-retry classifier — a retry is "cache-read" iff
-  *     its traced touch set intersects the memos that were live when
-  *     it started, not merely "some cache existed somewhere in the
-  *     family" (the r11 over-label that mislabeled retries whose warm
-  *     state never covered their expensive subtree);
-  *  2. a PER-MEMO clean-retry release ([[releaseNamed]]) — only the
-  *     memos the retried query actually touched are dropped and then
-  *     rebuilt (and re-registered) by the clean re-run itself, so a
-  *     forced flake on one entry can no longer void the whole family
-  *     scope and cascade first-touch rebuild costs through every
-  *     later same-family entry (the r9-r11 driver-bench distortion).
+  * Names make two bench mechanisms precise: a warm retry is
+  * "cache-read" iff its traced touch set ([[traced]]) intersects the
+  * memos live when it started ([[liveNamed]]), and the clean retry
+  * releases only those memos ([[releaseNamed]]) — the re-run rebuilds
+  * and re-registers them, and no other query's warm state moves.
   *
-  * Anonymous (unnamed) registrations — per-call persists and
-  * checkpoints that are rebuilt fresh on every invocation — are NOT
-  * warm state and stay exactly as before: released only at the family
-  * boundary / releaseAll. [[releaseNamed]] never runs them.
+  * Anonymous registrations ([[register]] without a name) are per-call
+  * persists and checkpoints rebuilt on every invocation: released only
+  * at the family boundary / [[releaseAll]], unless made inside a memo's
+  * build, where they attach to (and release with) that memo.
   */
 object CacheBook {
   private final case class Entry(name: String, thunk: () => Unit)
@@ -72,7 +72,8 @@ object CacheBook {
     override def initialValue(): List[(SparkSession, String, String)] = Nil
   }
 
-  /** Run a named memo's BUILD under its attachment context. */
+  /** Run a named memo's BUILD under its attachment context ([[memo]]
+    * wraps every build in this). */
   def building[T](s: SparkSession, scope: String, name: String)(body: => T): T = {
     buildCtx.set((s, scope, name) :: buildCtx.get())
     try body finally buildCtx.set(buildCtx.get().tail)
@@ -93,11 +94,9 @@ object CacheBook {
     ()
   }
 
-  /** Register a NAMED release thunk — map-backed memo state that stays
-    * warm across invocations. Callers pair this with a [[touch]] at
-    * every accessor entry so the bench can trace which memos a query
-    * read. Several thunks may share one name (a memo plus the helper
-    * persists its build pinned); [[releaseNamed]] runs them together. */
+  /** Register a NAMED release thunk. [[memo]] is the one caller in the
+    * engine; it stays public for the lifecycle specs. Several thunks may
+    * share one name; [[releaseNamed]] runs them together. */
   def register(s: SparkSession, scope: String, name: String)(
       thunk: () => Unit): Unit = {
     require(name.nonEmpty, "named registration requires a non-empty name")
@@ -106,10 +105,45 @@ object CacheBook {
     }
   }
 
-  /** Record a memo ACCESS (hit or miss — the accessor calls this before
-    * consulting its map). No-op unless a [[traced]] block is active. */
+  /** Record a memo ACCESS (hit or miss). No-op unless a [[traced]] block
+    * is active. [[memo]] calls this on every access. */
   def touch(s: SparkSession, scope: String, name: String): Unit =
     synchronized { if (traceBuf != null) { traceBuf += ((scope, name)); () } }
+
+  // One Once cell per (session, scope, name, key); see [[memo]].
+  private val cells = mutable.Map.empty[(SparkSession, String, String, Any), Once[Any]]
+
+  /** The family memo primitive: `build` runs once per (session, scope,
+    * name, key) and its value is shared by every later call until a
+    * release of the memo's scope or name, which evicts the cell and then
+    * runs `release` on the value. `key` is the corpus identity the build
+    * reads (usually the data dir). See the object doc for the full
+    * contract. */
+  def memo[T](s: SparkSession, scope: String, name: String, key: Any)(
+      build: => T)(release: T => Unit): T = {
+    touch(s, scope, name)
+    val k = (s, scope, name, key)
+    val cell = synchronized {
+      cells.getOrElseUpdate(k, new Once[Any](() => building(s, scope, name) {
+        val v = build
+        register(s, scope, name) { () =>
+          synchronized { cells.remove(k) }
+          release(v)
+        }
+        v
+      }))
+    }
+    cell.value.asInstanceOf[T]
+  }
+
+  /** [[memo]] for the dominant DataFrame policy: record the build's plan
+    * under (scope, name), eagerly `localCheckpoint` it (consumers plan
+    * against a LogicalRDD leaf instead of re-planning and re-codegening
+    * the build subtree), release with [[unpersistCheckpoint]]. */
+  def memoCheckpoint(s: SparkSession, scope: String, name: String, key: Any)(
+      build: => DataFrame): DataFrame =
+    memo(s, scope, name, key)(
+      recordBuildPlan(s, scope, name)(build).localCheckpoint(true))(unpersistCheckpoint)
 
   /** Run `body` with touch tracing active; returns (result, touched
     * (scope, name) pairs in first-touch order). Not reentrant — the
@@ -171,13 +205,11 @@ object CacheBook {
   }
 
   // ---- memo build plans ------------------------------------------------
-  // Since round 14 the family memos EAGERLY localCheckpoint (plan
-  // truncation — consumers read a LogicalRDD leaf instead of re-planning
-  // and re-codegening the build subtree). That makes the build's plan
-  // invisible to consumers, so the plan-shape invariants (PlanShapeSpec,
-  // AnnIndexStoreSpec) would lose their teeth: every memo build records
-  // its FORMATTED executed plan here, keyed like the release thunks, and
-  // the specs assert over query plan + touched build plans.
+  // A checkpointed memo hides its build's plan from consumers, so the
+  // plan-shape invariants (PlanShapeSpec, AnnIndexStoreSpec) would lose
+  // their teeth: memo builds record their FORMATTED executed plan here,
+  // keyed like the release thunks, and the specs assert over query plan
+  // + touched build plans.
   private val buildPlans =
     mutable.Map.empty[(SparkSession, String, String), String]
 

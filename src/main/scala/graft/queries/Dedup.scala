@@ -58,9 +58,6 @@ object Dedup {
       .select("source", "h")
   }
 
-  private val kmvCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
-
   /** Memoized full-corpus KMV sketch — the union memo below reads it,
     * so the shingle explode + two-phase bottom-k run once per (session,
     * corpus); released with "d". Eagerly localCheckpoint'ed, NOT merely
@@ -71,22 +68,10 @@ object Dedup {
     * cpu at flat job counts with the memo live). The checkpoint
     * truncates lineage, so a memory-evicted partition re-reads local
     * disk — recompute is structurally impossible. */
-  private def fullSketch(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "kmv_sketch")
-    synchronized { kmvCache.getOrElseUpdate((s, dir), new graft.Once(() => {
-      val sk = kmvBottomK(sourceHashes(s, dir), salted = true)
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "d", "kmv_sketch") { () =>
-        Dedup.synchronized { kmvCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(sk)
-        ()
-      }
-      sk
-    })) }.value
-  }
-
-  private val kmvUnionCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
+  private def fullSketch(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "kmv_sketch", dir)(
+      kmvBottomK(sourceHashes(s, dir), salted = true).localCheckpoint(true))(
+      graft.CacheBook.unpersistCheckpoint)
 
   /** Memoized union-bottom-K membership rows over the FULL-corpus
     * sketch — the ≤ S²/2·K-row relation BOTH probe entries
@@ -94,19 +79,10 @@ object Dedup {
     * (session, corpus) instead of once per entry (the r12 ADVICE
     * item: each probe re-ran the pair-window build behind the sketch
     * memo). localCheckpoint'ed like [[fullSketch]], same rationale. */
-  private def kmvUnionMemo(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "kmv_union")
-    synchronized { kmvUnionCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-      graft.CacheBook.building(s, "d", "kmv_union") {
-        val u = kmvUnionTopK(fullSketch(s, dir)).localCheckpoint(true)
-        graft.CacheBook.register(s, "d", "kmv_union") { () =>
-          Dedup.synchronized { kmvUnionCache.remove((s, dir)) }
-          graft.CacheBook.unpersistCheckpoint(u)
-          ()
-        }
-        u
-      })) }.value
-  }
+  private def kmvUnionMemo(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "kmv_union", dir)(
+      kmvUnionTopK(fullSketch(s, dir)).localCheckpoint(true))(
+      graft.CacheBook.unpersistCheckpoint)
 
   /** Per-pair union-bottom-K membership rows over a KMV sketch
     * relation: for each source pair, merge the two sketches, keep the
@@ -149,9 +125,6 @@ object Dedup {
         expr("hits * 1000000 div kk").as("est_jaccard_micro"))
       .orderBy("src_a", "src_b")
 
-  private val kmvStoreCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[String]]
-
   /** The STANDING per-source sketch as a persisted artifact — last
     * night's [[graft.sources.SketchStore]] write over the pre-batch
     * corpus (doc_id < tNew), built once per (session, corpus) and READ
@@ -160,27 +133,19 @@ object Dedup {
     * per-call cost is the delta explode + an S·K-row parquet scan —
     * never a re-scan of yesterday's text. Released with "d" (deletes
     * the temp store). */
-  private def standingSketchPath(s: SparkSession, dir: String): String = {
-    graft.CacheBook.touch(s, "d", "kmv_store")
-    synchronized { kmvStoreCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-      graft.CacheBook.building(s, "d", "kmv_store") {
-        val tNew = newDocThreshold(s, dir)
-        val standing = kmvBottomK(
-          sourceHashes(s, dir).filter(col("doc_id") < tNew), salted = true)
-        val path = java.nio.file.Files.createTempDirectory("graft-kmv-store").toString
-        graft.sources.SketchStore.write(path, standing)
-        graft.CacheBook.register(s, "d", "kmv_store") { () =>
-          Dedup.synchronized { kmvStoreCache.remove((s, dir)) }
-          val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-          ()
-        }
-        path
-      })) }.value
-  }
-
-  private val overlapIncCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
+  private def standingSketchPath(s: SparkSession, dir: String): String =
+    graft.CacheBook.memo(s, "d", "kmv_store", dir) {
+      val tNew = newDocThreshold(s, dir)
+      val standing = kmvBottomK(
+        sourceHashes(s, dir).filter(col("doc_id") < tNew), salted = true)
+      val path = java.nio.file.Files.createTempDirectory("graft-kmv-store").toString
+      graft.sources.SketchStore.write(path, standing)
+      path
+    } { path =>
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      ()
+    }
 
   /** Memoized d_overlap_inc result — the nightly merge runs once per
     * (session, corpus): standing sketch FROM THE STORE ∪ tonight's
@@ -190,27 +155,18 @@ object Dedup {
     * Memoizing the whole result also stops repeated calls from
     * accumulating per-call persists (each former call registered its
     * own anonymous release — the r12 ADVICE leak). */
-  private def overlapIncMemo(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "overlap_inc")
-    synchronized { overlapIncCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-      graft.CacheBook.building(s, "d", "overlap_inc") {
-        val tNew = newDocThreshold(s, dir)
-        val standing = graft.sources.SketchStore.read(s, standingSketchPath(s, dir))
-        val delta = sourceHashes(s, dir).filter(col("doc_id") >= tNew)
-          .select("source", "h")
-        val merged = kmvBottomK(standing.unionByName(delta), salted = false)
-          .localCheckpoint(true) // feeds three consumers (source list + both join sides)
-        graft.CacheBook.register(s, "d")(() =>
-          graft.CacheBook.unpersistCheckpoint(merged))
-        val out = kmvPairs(kmvUnionTopK(merged)).localCheckpoint(true)
-        graft.CacheBook.register(s, "d", "overlap_inc") { () =>
-          Dedup.synchronized { overlapIncCache.remove((s, dir)) }
-          graft.CacheBook.unpersistCheckpoint(out)
-          ()
-        }
-        out
-      })) }.value
-  }
+  private def overlapIncMemo(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "overlap_inc", dir) {
+      val tNew = newDocThreshold(s, dir)
+      val standing = graft.sources.SketchStore.read(s, standingSketchPath(s, dir))
+      val delta = sourceHashes(s, dir).filter(col("doc_id") >= tNew)
+        .select("source", "h")
+      val merged = kmvBottomK(standing.unionByName(delta), salted = false)
+        .localCheckpoint(true) // feeds three consumers (source list + both join sides)
+      graft.CacheBook.register(s, "d")(() =>
+        graft.CacheBook.unpersistCheckpoint(merged))
+      kmvPairs(kmvUnionTopK(merged)).localCheckpoint(true)
+    }(graft.CacheBook.unpersistCheckpoint)
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
@@ -237,38 +193,19 @@ object Dedup {
     * (measured 77/79 at sf0.1) while cutting candidate pairs ~5x.
     * Shingles are hashed to 48-bit longs up front: the per-pair set
     * intersections then compare longs, not strings — the pairwise
-    * verify is the quadratic hot loop, so this is where the time goes. */
-  private val shCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
-
-  /** Memoized per (session, corpus): three queries (ngram/minhash/
+    * verify is the quadratic hot loop, so this is where the time goes.
+    *
+    * Memoized per (session, corpus): three queries (ngram/minhash/
     * cluster) consume the same shingle relation — in one session the
     * 1.5M-md5 build runs once, not three times. Materialized EAGERLY:
     * every consumer is a self-join, and a lazy persist lets the join
     * branches race and compute the build twice before either populates
-    * the cache. All memos here hold a [[graft.Once]] cell, so
-    * INDEPENDENT builds overlap across threads while each key builds
-    * exactly once. */
-  /** Register eviction for a persisted memo entry: unpersist the blocks
-    * and drop the map entry so a later call rebuilds from source. All
-    * build-side dedup memos live in bench scope "d" (released after the
-    * d_* family); the final label table lives in scope "x" (x_canon, the
-    * alphabetically-late consumer, still needs it). */
-  private def book(s: SparkSession, dir: String, scope: String, name: String,
-      cache: collection.mutable.Map[(SparkSession, String), graft.Once[DataFrame]],
-      df: DataFrame, checkpointed: Boolean = false): DataFrame = {
-    graft.CacheBook.register(s, scope, name) { () =>
-      Dedup.synchronized { cache.remove((s, dir)) }
-      if (checkpointed) graft.CacheBook.unpersistCheckpoint(df)
-      else df.unpersist(false)
-      ()
-    }
-    df
-  }
-
-  private def shingleSets(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "shingles")
-    synchronized { shCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+    * the cache. All build-side dedup memos live in bench scope "d"
+    * (released after the d_* family); the final label table lives in
+    * scope "x" (x_canon, the alphabetically-late consumer, still needs
+    * it). */
+  private def shingleSets(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "shingles", dir) {
       // One custom codegen Expression builds the sorted distinct hash
       // array per doc (ShingleHashSet; spec-verified identical to the
       // transform+md5IdxK Column formula). No shuffle — scales with the
@@ -283,7 +220,7 @@ object Dedup {
       // partitions beat wide ones (A/B-measured; the wide persist cost
       // minhash/cluster consumers more than the parallel build saved)
       val width = s.sparkContext.defaultParallelism
-      val sh = docs(s, dir).repartition(width)
+      docs(s, dir).repartition(width)
         .select(col("doc_id"), col("lang"),
           expr("n_chars div 100").as("lb"),
           org.apache.spark.sql.graftbridge.ColumnBridge.column(
@@ -293,15 +230,10 @@ object Dedup {
         .repartition(math.max(width / 4, 1))
         // EAGER localCheckpoint, not persist (round 14): the persisted
         // relation kept its full logical plan, and every consumer
-        // re-planned + re-codegen'd the build subtree (the memoAnn
+        // re-planned + re-codegen'd the build subtree (the ANN-memo
         // Janino finding) — the checkpoint truncates it to a LogicalRDD
         .localCheckpoint(true)
-      book(s, dir, "d", "shingles", shCache, sh, checkpointed = true)
-    })) }.value
-  }
-
-  private val jacCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
+    }(graft.CacheBook.unpersistCheckpoint)
 
   /** Cap on (lang, length-bucket) block population for the pairwise
     * Jaccard verify (GRAFT_JACCARD_BLOCK_CAP). */
@@ -333,9 +265,8 @@ object Dedup {
     * blocks — shared verbatim by d_ngram_jaccard (reports them) and
     * d_cluster (uses them as edges). Post-threshold the relation is
     * tiny, so it persists whole. */
-  private def jaccardPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "jaccard")
-    synchronized { jacCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "jaccard", dir) {
       import s.implicits._
       val sh = boundedBlocks(shingleSets(s, dir), BlockCap)
       // Collect each (lang, lb, sub) block to ONE row and run the
@@ -349,7 +280,7 @@ object Dedup {
       // MB) and the output is only the passing pairs.
       val blocks = sh.groupBy("lang", "lb", "sub")
         .agg(collect_list(struct(col("doc_id"), col("sh"))).as("ds"))
-      val pairs = blocks.select(col("ds")).flatMap { row =>
+      blocks.select(col("ds")).flatMap { row =>
         val ds = row.getSeq[org.apache.spark.sql.Row](0)
         val n = ds.length
         val ids = new Array[Long](n)
@@ -392,27 +323,18 @@ object Dedup {
         // the pairwise join several times), and the truncated plan
         // spares every consumer the build subtree's codegen
         .localCheckpoint(true)
-      book(s, dir, "d", "jaccard", jacCache, pairs, checkpointed = true)
-    })) }.value
-  }
-
-  private val mhCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
+    }(graft.CacheBook.unpersistCheckpoint)
 
   /** Memoized MinHash-LSH near-dup pairs (banding → candidate equi-join
     * → exact-Jaccard verify) — shared by d_minhash_lsh (reports them)
     * and d_dedup_eval (compares them against the blocked pass), so the
     * signature aggregation runs once per (session, corpus). */
-  private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "minhash")
-    synchronized { mhCache.getOrElseUpdate((s, dir), new graft.Once(() => {
-      val pairs = lshPairs(shingleSets(s, dir), minJac = 0.2)
+  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "minhash", dir)(
+      lshPairs(shingleSets(s, dir), minJac = 0.2)
         // eager checkpoint: consumers fan out into racing union
         // branches, and the truncated plan spares them the codegen
-        .localCheckpoint(true)
-      book(s, dir, "d", "minhash", mhCache, pairs, checkpointed = true)
-    })) }.value
-  }
+        .localCheckpoint(true))(graft.CacheBook.unpersistCheckpoint)
 
   /** MinHash-LSH near-dup pairs over any (doc_id, sh) frame where `sh`
     * is a SORTED distinct shingle-hash array (ShingleHashSet output):
@@ -449,9 +371,6 @@ object Dedup {
     verifyPairs(sh, cand, minJac)
   }
 
-  private val bandCache =
-    collection.mutable.Map.empty[(SparkSession, Int, Int), graft.Once[DataFrame]]
-
   /** Memoized band table per (session, shingle-relation identity):
     * the signature aggregation (explode → 8-way min) is the expensive
     * half of the LSH build, and THREE consumers walk it — lshPairs
@@ -464,33 +383,17 @@ object Dedup {
     * wrong-table reuse (the failure mode of a bare int hash)
     * practically impossible. Released with the "d" family scope. */
   private def bandsMemo(sh: DataFrame): DataFrame = {
-    val s = sh.sparkSession
-    val key = (s, System.identityHashCode(sh.queryExecution.logical),
-      sh.semanticHash())
+    val key = (System.identityHashCode(sh.queryExecution.logical), sh.semanticHash())
     // the touch/release name carries the full key: several band tables
     // can be live at once (d_dedup_eval's variants), and a clean retry
-    // must drop only the one the retried query read
-    graft.CacheBook.touch(s, "d", s"bands:${key._2}:${key._3}")
-    synchronized {
-      bandCache.getOrElseUpdate(key, new graft.Once(() => {
-        // EAGER localCheckpoint, not persist (round 14): the persisted
-        // band table kept its full build plan (sig agg + band explode),
-        // and every consumer — the LSH self-joins reference it on BOTH
-        // sides — re-planned and re-codegen'd that subtree per first
-        // touch (measured: d_edit_dup first-touch 10.2 cpu-s at 0.9
-        // cpu-s of actual execution). The checkpoint truncates it to a
-        // LogicalRDD leaf; the build plan stays auditable via
-        // CacheBook.recordBuildPlan.
-        val b = graft.CacheBook.recordBuildPlan(s, "d",
-          s"bands:${key._2}:${key._3}")(bandsOf(sh)).localCheckpoint(true)
-        graft.CacheBook.register(s, "d", s"bands:${key._2}:${key._3}") { () =>
-          Dedup.synchronized { bandCache.remove(key) }
-          graft.CacheBook.unpersistCheckpoint(b)
-          ()
-        }
-        b
-      }))
-    }.value
+    // must drop only the one the retried query read. Checkpointed, not
+    // persisted (round 14): the persisted band table kept its full build
+    // plan (sig agg + band explode), and every consumer — the LSH
+    // self-joins reference it on BOTH sides — re-planned and re-codegen'd
+    // that subtree per first touch (measured: d_edit_dup first-touch
+    // 10.2 cpu-s at 0.9 cpu-s of actual execution).
+    graft.CacheBook.memoCheckpoint(sh.sparkSession, "d",
+      s"bands:${key._1}:${key._2}", key)(bandsOf(sh))
   }
 
   /** 8 minhash signatures → 4 bands x 2 rows per doc. The 4 band rows
@@ -561,21 +464,9 @@ object Dedup {
   /** The gate's "new batch" boundary: the last 20% of doc ids play the
     * nightly delta. One scalar action, memoized — three incremental
     * queries share it. */
-  private val tNewCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[Long]]
-  private def newDocThreshold(s: SparkSession, dir: String): Long = {
-    graft.CacheBook.touch(s, "d", "tnew")
-    synchronized { tNewCache.getOrElseUpdate((s, dir), new graft.Once(() => {
-      graft.CacheBook.register(s, "d", "tnew") { () =>
-        Dedup.synchronized { tNewCache.remove((s, dir)) }
-        ()
-      }
-      docs(s, dir).agg(max("doc_id")).head().getLong(0) * 4 / 5
-    })) }.value
-  }
-
-  private val oldLblCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
+  private def newDocThreshold(s: SparkSession, dir: String): Long =
+    graft.CacheBook.memo(s, "d", "tnew", dir)(
+      docs(s, dir).agg(max("doc_id")).head().getLong(0) * 4 / 5)(_ => ())
 
   /** Memoized STANDING labels over the old corpus's LSH pairs — the
     * in-session analog of the persisted nightly labeling
@@ -583,32 +474,20 @@ object Dedup {
     * incremental job READS last night's labels, it never recomputes
     * them, so their construction is a build artifact (priced in
     * d_build), not incremental-query latency. */
-  private def standingLabels(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "standing_labels")
-    synchronized { oldLblCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def standingLabels(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "standing_labels", dir) {
       val t = newDocThreshold(s, dir)
       // a < b on every pair, so "both endpoints old" is just b < t
-      val lbl = ConnectedComponents.run(
+      ConnectedComponents.run(
         minhashPairs(s, dir).filter(col("b") < t).select("a", "b"))
         .localCheckpoint(true)
-      graft.CacheBook.register(s, "d", "standing_labels") { () =>
-        Dedup.synchronized { oldLblCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(lbl)
-        ()
-      }
-      lbl
-    })) }.value
-  }
-
-  private val exactCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
+    }(graft.CacheBook.unpersistCheckpoint)
 
   /** Memoized exact-dup pairs over the twin corpus (normalize → hash →
     * window-min canonical) — shared by d_exact (reports them) and
     * d_cluster (uses them as edges). */
-  private def exactPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "exact_pairs")
-    synchronized { exactCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def exactPairs(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "exact_pairs", dir) {
       val d = docs(s, dir)
       val corpus = d.select(col("doc_id"), col("text"))
         .unionByName(d.select((col("doc_id") + 100000L).as("doc_id"),
@@ -618,13 +497,11 @@ object Dedup {
       // canonical-per-group via a window: ONE shuffle on the hash, no
       // groupBy + self-join (which scans and md5s the corpus twice)
       val w = org.apache.spark.sql.expressions.Window.partitionBy("h")
-      book(s, dir, "d", "exact_pairs", exactCache,
-        hashed.withColumn("dup_of", min("doc_id").over(w))
-          .filter(col("doc_id") =!= col("dup_of"))
-          .select("doc_id", "dup_of")
-          .localCheckpoint(true), checkpointed = true)
-    })) }.value
-  }
+      hashed.withColumn("dup_of", min("doc_id").over(w))
+        .filter(col("doc_id") =!= col("dup_of"))
+        .select("doc_id", "dup_of")
+        .localCheckpoint(true)
+    }(graft.CacheBook.unpersistCheckpoint)
 
   private val sqlShingleSets =
     s"""SELECT doc_id, lang, n_chars // 100 AS lb,
@@ -1212,7 +1089,7 @@ object Dedup {
       // branches racing the md5 scan (SURVEY §4), and the CHECKPOINT
       // truncates the plan so the three consumer stages codegen against
       // a LogicalRDD leaf instead of re-inlining the ShingleHashSet
-      // subtree (the memoAnn Janino finding, stage-attributed here:
+      // subtree (the ANN-memo Janino finding, stage-attributed here:
       // the 32-task self-join stage burned more cpu than its data)
       val sh = docs(s, dir)
         .select(col("doc_id"),
@@ -1252,26 +1129,16 @@ object Dedup {
     })
   )
 
-  private val edgeCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
-
   /** Memoized, materialized clustering edge list (exact-dup ∪ Jaccard
     * pairs) — d_cluster and d_cluster_stars run different component
     * algorithms over the SAME edges, so the union is checkpointed once
     * per (session, corpus). */
-  private def clusterEdges(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "cluster_edges")
-    synchronized { edgeCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def clusterEdges(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "cluster_edges", dir) {
       val ePairs = exactPairs(s, dir)
         .select(col("dup_of").as("a"), col("doc_id").as("b"))
-      book(s, dir, "d", "cluster_edges", edgeCache,
-        ePairs.union(jaccardPairs(s, dir).select("a", "b")).localCheckpoint(true),
-        checkpointed = true)
-    })) }.value
-  }
-
-  private val starsCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
+      ePairs.union(jaccardPairs(s, dir).select("a", "b")).localCheckpoint(true)
+    }(graft.CacheBook.unpersistCheckpoint)
 
   /** Memoized star-contraction labels over [[clusterEdges]] — the
     * d_cluster_stars result relation. runStars returns an eager local
@@ -1279,16 +1146,10 @@ object Dedup {
     * so a bench warm retry reads standing state instead of silently
     * re-running the whole per-round checkpoint loop (the r13 `weak`
     * signature: flat jobs, 70 re-written blocks, nothing to read). */
-  private def starsLabels(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "d", "stars_labels")
-    synchronized { starsCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-      book(s, dir, "d", "stars_labels", starsCache,
-        ConnectedComponents.runStars(clusterEdges(s, dir)),
-        checkpointed = true))) }.value
-  }
-
-  private val labelCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[DataFrame]]
+  private def starsLabels(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "d", "stars_labels", dir)(
+      ConnectedComponents.runStars(clusterEdges(s, dir)))(
+      graft.CacheBook.unpersistCheckpoint)
 
   /** Memoized component labels over [[clusterEdges]] — shared by
     * d_cluster (reports them) and x_canon (picks canonicals), so the
@@ -1306,9 +1167,8 @@ object Dedup {
     * canonical). At corpus scale the exact stars are the bulk of the
     * edge volume, so the propagation loop runs on a graph orders of
     * magnitude smaller — the standard production-dedup shape. */
-  private def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "x", "cluster_labels")
-    synchronized { labelCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def clusterLabels(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "x", "cluster_labels", dir) {
       // prefetch the heavy memoized inputs BEFORE taking the conf lock:
       // holding confLock through a shingle/Jaccard build would block
       // every concurrent CC run on an unrelated expensive stage
@@ -1318,13 +1178,9 @@ object Dedup {
       // confLock serializes the override with concurrent CC runs —
       // re-entrant, so the run() inside the body locks again safely
       ConnectedComponents.confLock.synchronized {
-        ConnectedComponents.pinnedLoopConf(s) {
-          book(s, dir, "x", "cluster_labels", labelCache,
-            clusterLabelsBody(s, dir), checkpointed = true)
-        }
+        ConnectedComponents.pinnedLoopConf(s)(clusterLabelsBody(s, dir))
       }
-    })) }.value
-  }
+    }(graft.CacheBook.unpersistCheckpoint)
 
   private def clusterLabelsBody(s: SparkSession, dir: String): DataFrame = {
       val ex = exactPairs(s, dir) // (doc_id, dup_of): non-canonical members only

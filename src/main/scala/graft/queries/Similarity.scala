@@ -89,21 +89,10 @@ object Similarity {
       "the data-derived centroid count — scale-experiment mode; oracle " +
       "hash-matches are NOT expected under an override"))
 
-  private val vecCountCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[Long]]
-
   /** Memoized corpus vector count — one bounded scalar action feeding
     * every derived-K site (the newDocThreshold convention). */
-  private[graft] def vecCount(s: SparkSession, dir: String): Long = {
-    graft.CacheBook.touch(s, "s", "vec_count")
-    synchronized { vecCountCache.getOrElseUpdate((s, dir), new graft.Once(() => {
-      graft.CacheBook.register(s, "s", "vec_count") { () =>
-        Similarity.synchronized { vecCountCache.remove((s, dir)) }
-        ()
-      }
-      vecs(s, dir).count()
-    })) }.value
-  }
+  private[graft] def vecCount(s: SparkSession, dir: String): Long =
+    graft.CacheBook.memo(s, "s", "vec_count", dir)(vecs(s, dir).count())(_ => ())
 
   /** Derived centroid count for the corpus-level IVF index. */
   private[graft] def nCentroids(s: SparkSession, dir: String): Int =
@@ -313,7 +302,9 @@ object Similarity {
              CAST(sum(CAST(floor(xsub[CAST(i AS INT)] * 1000000.0) AS BIGINT)) AS DOUBLE)
                / (count(*) * 1000000.0) AS comp
            FROM pa$it, unnest(range(1, ${PqSub + 1})) AS t(i) GROUP BY m, code, i),
-         cb$it AS (SELECT m, code, list(comp ORDER BY i) AS csub FROM pm$it GROUP BY m, code)"""
+         nm$it AS (SELECT m, code, list(comp ORDER BY i) AS csub FROM pm$it GROUP BY m, code),
+         cb$it AS (SELECT $prev.m, $prev.code, coalesce(nm$it.csub, $prev.csub) AS csub
+           FROM $prev LEFT JOIN nm$it ON $prev.m = nm$it.m AND $prev.code = nm$it.code)"""
     }.mkString(",\n", ",\n", "")
 
   private def topk(joined: DataFrame): DataFrame = {
@@ -435,12 +426,6 @@ object Similarity {
       } finally { s.conf.set(key, prev); s.conf.set(aqeKey, prevA) }
     }
 
-  private val bfCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[DataFrame]]
-
-  private val sigCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[DataFrame]]
-
   /** ONE shared signature-augmented corpus projection — vecs plus the
     * two 32-bit sign-signature halves (s1, s2) AND the Matryoshka
     * prefix norm (pn) — persisted once per (session, corpus) and read
@@ -450,92 +435,40 @@ object Similarity {
     * three derived columns costs 24 bytes/row over the vectors and
     * follows the buildIvfIndex single-cache discipline. Released with
     * the "s" family scope. */
-  private def sigBase(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "s", "sig_base")
-    synchronized { sigCache.getOrElseUpdate((s, dir), new graft.Once(() => {
-      // EAGER localCheckpoint, not persist (the item-1 plan tax): the
-      // BQ/MRL consumers re-planned and re-codegen'd the signature
-      // projection behind the InMemoryRelation on every action.
-      val e = graft.CacheBook.recordBuildPlan(s, "s", "sig_base")(
-        vecs(s, dir)
-          .withColumn("s1", bqSig(col("v"), 0))
-          .withColumn("s2", bqSig(col("v"), 32))
-          .withColumn("pn", sqrt(prefixDot(col("v"), col("v"), MrlDim))))
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "s", "sig_base") { () =>
-        Similarity.synchronized { sigCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(e)
-        ()
-      }
-      e
-    })) }.value
-  }
+  private def sigBase(s: SparkSession, dir: String): DataFrame =
+    // checkpointed, not persisted (the item-1 plan tax): the BQ/MRL
+    // consumers re-planned and re-codegen'd the signature projection
+    // behind the InMemoryRelation on every action
+    graft.CacheBook.memoCheckpoint(s, "s", "sig_base", dir)(
+      vecs(s, dir)
+        .withColumn("s1", bqSig(col("v"), 0))
+        .withColumn("s2", bqSig(col("v"), 32))
+        .withColumn("pn", sqrt(prefixDot(col("v"), col("v"), MrlDim))))
 
-  private val annCache = collection.mutable
-    .Map.empty[(SparkSession, String, String), graft.Once[DataFrame]]
-
-  /** Memoize an ANN query's K*NQueries-row result per (session, corpus,
-    * name), released with the "s" family scope. The recall evals each
-    * re-ran their sibling probe pipeline end-to-end (locally ~0.2 s of
-    * redundancy, but in a contended window every extra multi-job
-    * pipeline multiplies) — with the result memoized, s_*_recall is one
-    * join of two cached 25-row frames, and each probe pipeline runs
-    * exactly once per session however many entries consume it. */
-  private def memoAnn(name: String)(
-      body: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => {
-      graft.CacheBook.touch(s, "s", s"ann:$name")
-      synchronized {
-        annCache.getOrElseUpdate((s, dir, name), new graft.Once(() =>
-          graft.CacheBook.building(s, "s", s"ann:$name") {
-          // EAGER localCheckpoint, not persist (round 14): a persisted
-          // memo keeps its full logical plan, so every CONSUMER re-plans
-          // and re-CODEGENS the whole build subtree — Janino compilation
-          // of the inlined multi-join lineage measured 10-20 cpu-s per
-          // first task on the wedge queries (recs=64, cpu=16 s stages in
-          // the event log), dwarfing their actual data work. The
-          // checkpoint truncates the memo to a LogicalRDD leaf: same
-          // rows, same blocks, postcard-sized consumer plans.
-          val r = graft.CacheBook.recordBuildPlan(s, "s", s"ann:$name")(
-            body(s, dir)).localCheckpoint(true)
-          graft.CacheBook.register(s, "s", s"ann:$name") { () =>
-            Similarity.synchronized { annCache.remove((s, dir, name)) }
-            graft.CacheBook.unpersistCheckpoint(r)
-            ()
-          }
-          r
-        }))
-      }.value
-    }
-  // (the building(...) wrapper above attaches the body's per-call
-  // anonymous registrations — beamWalk checkpoints, body-local
-  // persists — to this memo's name, so a clean-retry releaseNamed
-  // frees them with the memo instead of leaking them to family end)
+  // ANN query results are "ann:<entry>" memos (CacheBook.memoCheckpoint):
+  // each K*NQueries-row result materializes once per (session, corpus).
+  // The recall evals each re-ran their sibling probe pipeline end to
+  // end; with the result memoized, s_*_recall is one join of two
+  // checkpointed 25-row frames. The checkpoint (not a persist) keeps
+  // consumer plans postcard-sized: Janino compilation of the inlined
+  // multi-join lineage measured 10-20 cpu-s per first task on the
+  // wedge queries.
 
   /** Memoized brute-force cosine top-k — the ground-truth ranking. Five
     * recall queries compare an ANN path against this same baseline, so
     * it materializes once per (session, corpus) (computing ground truth
     * once and reusing it across evals is the standard ANN-benchmark
     * shape); released with the "s" family scope. */
-  private def bfTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "s", "bf_topk")
-    synchronized { bfCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def bfTopk(s: SparkSession, dir: String): DataFrame =
+    // checkpointed: a truncated plan for the 5 recall readers
+    graft.CacheBook.memoCheckpoint(s, "s", "bf_topk", dir) {
       val e = vecs(s, dir)
       val q = broadcast(e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), col("v").as("qv"), col("n").as("qn")))
-      val r = graft.CacheBook.recordBuildPlan(s, "s", "bf_topk")(
-        topk(q.join(e, col("vec_id") =!= col("q"))
-          .select(col("q"), col("vec_id"),
-            VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos"))))
-        .localCheckpoint(true) // truncated plan for the 5 recall readers
-      graft.CacheBook.register(s, "s", "bf_topk") { () =>
-        Similarity.synchronized { bfCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(r)
-        ()
-      }
-      r
-    })) }.value
-  }
+      topk(q.join(e, col("vec_id") =!= col("q"))
+        .select(col("q"), col("vec_id"),
+          VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos")))
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -587,7 +520,7 @@ object Similarity {
     // single-probe ~0 on weakly-clustered corpora. Bucketed table
     // persisted: the 8x64-term signature projection runs once per row,
     // not once per join side.
-    "s_lsh_ann" -> memoAnn("s_lsh_ann")((s, dir) => {
+    "s_lsh_ann" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_lsh_ann", dir) {
       val e = graft.CacheBook.materialize(
         vecs(s, dir).withColumn("bucket", VecOps.lshBucket(col("v")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -640,7 +573,7 @@ object Similarity {
     // never ride through the coarse window; the rescore joins them
     // back. Hamming ties break on vec_id, so the candidate set — and
     // therefore the final ranking — is deterministic cross-engine.
-    "s_bq_topk" -> memoAnn("s_bq_topk")((s, dir) => {
+    "s_bq_topk" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_bq_topk", dir) {
       val e = sigBase(s, dir) // shared sig-augmented base — one cache, not one per entry
       val q = broadcast(e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), col("v").as("qv"), col("n").as("qn"),
@@ -669,7 +602,7 @@ object Similarity {
     // RescoreC survivors. Same slim candidate frame + join-back shape
     // as s_bq_topk; prefix cosines use the same unrolled IEEE chain as
     // every other cosine here, so the coarse cut is bit-exact too.
-    "s_mrl_topk" -> memoAnn("s_mrl_topk")((s, dir) => {
+    "s_mrl_topk" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_mrl_topk", dir) {
       val e = sigBase(s, dir) // shared sig-augmented base — one cache, not one per entry
       val q = broadcast(e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), col("v").as("qv"), col("n").as("qn"),
@@ -702,7 +635,7 @@ object Similarity {
     // come off the shared sigBase cache. Hamming ties break on vec_id,
     // so the candidate set and final ranking stay deterministic
     // cross-engine.
-    "s_ivf_bq" -> memoAnn("s_ivf_bq")((s, dir) => {
+    "s_ivf_bq" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_ivf_bq", dir) {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val sigCells = assigned.select(col("vec_id"), col("cid"),
         bqSig(col("v"), 0).as("s1"), bqSig(col("v"), 32).as("s2"))
@@ -739,7 +672,7 @@ object Similarity {
     // sigBase cache, and the exact full-dim cosine rescores the
     // RescoreC survivors. Same slim (q, vec_id) candidate frame as
     // s_ivf_bq — full vectors join back only for the rescore.
-    "s_ivf_mrl" -> memoAnn("s_ivf_mrl")((s, dir) => {
+    "s_ivf_mrl" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_ivf_mrl", dir) {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val pn = sigBase(s, dir).select(col("vec_id"), col("pn"))
       val e = vecs(s, dir)
@@ -778,7 +711,7 @@ object Similarity {
     // (greatest() selections over unrolled IEEE dot chains, floored to
     // micro-units and summed as BIGINT — row-local, order-free, exact
     // cross-engine), and only (q, vec_id, ms) crosses the top-K window.
-    "s_maxsim" -> memoAnn("s_maxsim")((s, dir) => {
+    "s_maxsim" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_maxsim", dir) {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val e = vecs(s, dir)
       val w = Window.partitionBy("q").orderBy(col("ms").desc, col("vec_id").asc)
@@ -810,7 +743,7 @@ object Similarity {
     // s_index_build): this entry is the PRODUCTION probe — pointer
     // resolve, broadcast centroid scoring, partition-PRUNED cell scan
     // (only the ≤ NQ·8·np probed cell directories are read), rerank.
-    "s_maxsim_tok" -> memoAnn("s_maxsim_tok")((s, dir) => {
+    "s_maxsim_tok" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_maxsim_tok", dir) {
       val e = vecs(s, dir)
       val path = tokIndexPath(s, dir)
       val (cents0, _) = graft.sources.AnnIndexStore.read(s, path)
@@ -858,7 +791,7 @@ object Similarity {
     // full one-shot recompute over old-drawn centroids — per-token
     // argmax is independent, so the gate itself proves merged ==
     // rebuild.
-    "s_tok_upsert" -> memoAnn("s_tok_upsert")((s, dir) => {
+    "s_tok_upsert" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_tok_upsert", dir) {
       val e = vecs(s, dir)
       val (tNew, kOldTok, cents, standing) = tokOldIndex(s, dir)
       val cb = broadcast(cents)
@@ -935,7 +868,7 @@ object Similarity {
     // reps·NProbe·cell-population — never all-pairs, and never
     // replica-inflated; the replica screen itself is bucket-bounded
     // (expected bucket population N/2^NPlanes).
-    "s_dbscan" -> memoAnn("s_dbscan")((s, dir) => {
+    "s_dbscan" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_dbscan", dir) {
       val e0 = vecs(s, dir)
       val twin = e0.select((col("vec_id") + 100000L).as("vec_id"), col("label"),
           concat(array(element_at(col("v"), 1) + 0.05),
@@ -1120,7 +1053,7 @@ object Similarity {
     // 2 rounds. Output: top-PprK per seed among strictly-positive
     // scores (both engines gate pr > 0 BEFORE ranking, so sparse-vs-
     // dense formulations cannot disagree on tail rows).
-    "s_ppr" -> memoAnn("s_ppr")((s, dir) => {
+    "s_ppr" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_ppr", dir) {
       val ed = graphEd(s, dir)
       val restart = vecs(s, dir).filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), col("vec_id"), lit(150000L).as("dpr"))
@@ -1223,7 +1156,9 @@ object Similarity {
     // bounded broadcast and cell population ~sqrt(N) — the measured
     // r12 curvature fix (a modulo sample's centroid set grows linearly
     // and the assignment quadratically — the r03 scale defect).
-    "s_ivf_ann" -> memoAnn("s_ivf_ann")((s, dir) => ivfAnn(s, dir, refine = false)),
+    "s_ivf_ann" -> ((s, dir) =>
+      graft.CacheBook.memoCheckpoint(s, "s", "ann:s_ivf_ann", dir)(
+        ivfAnn(s, dir, refine = false))),
 
     // SIMPLIFIED SILHOUETTE per IVF cell — the clustering-quality audit
     // of the standing index (s_index_health counts cell populations;
@@ -1296,7 +1231,9 @@ object Similarity {
     // iters x nprobe), while on naturally-clustered data it is the
     // standard production choice. Both variants answer to oracles; the
     // two recall evals price them side by side.
-    "s_ivf_kmeans" -> memoAnn("s_ivf_kmeans")((s, dir) => ivfAnn(s, dir, refine = true)),
+    "s_ivf_kmeans" -> ((s, dir) =>
+      graft.CacheBook.memoCheckpoint(s, "s", "ann:s_ivf_kmeans", dir)(
+        ivfAnn(s, dir, refine = true))),
 
     "s_ivf_kmeans_recall" -> recallOf("s_ivf_kmeans"),
 
@@ -1312,7 +1249,7 @@ object Similarity {
     // IvfUpsertSpec proves merged == from-scratch rebuild against the
     // same centroids (per-vector argmax is independent), so nightly
     // upserts never drift from a rebuild.
-    "s_ivf_upsert" -> memoAnn("s_ivf_upsert")((s, dir) => {
+    "s_ivf_upsert" -> ((s, dir) => graft.CacheBook.memoCheckpoint(s, "s", "ann:s_ivf_upsert", dir) {
       val (tNew, seed) = oldSeed(s, dir)
       queryIvf(s, dir, seed, upsertAssign(vecs(s, dir), seed, tNew))
     }),
@@ -1369,7 +1306,8 @@ object Similarity {
     // starves the probed cells and wants either more probes or a
     // pre-filtered per-label index — s_filtered_recall prices exactly
     // that starvation against the filtered brute force.
-    "s_filtered_ann" -> memoAnn("s_filtered_ann")((s, dir) => {
+    "s_filtered_ann" -> ((s, dir) =>
+      graft.CacheBook.memoCheckpoint(s, "s", "ann:s_filtered_ann", dir) {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val e = vecs(s, dir)
       val probes = probeCells(e, broadcast(cents))
@@ -1410,7 +1348,8 @@ object Similarity {
     // decision is integer-exact cross-engine (a cos within 1e-16 of τ
     // must land on the same side in both engines). τ sits above the
     // corpus's p99 cosine — selective, as a dedup/match radius is.
-    "s_range_search" -> memoAnn("s_range_search")((s, dir) => {
+    "s_range_search" -> ((s, dir) =>
+      graft.CacheBook.memoCheckpoint(s, "s", "ann:s_range_search", dir) {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val probes = probeCells(vecs(s, dir), broadcast(cents))
       probes.join(assigned, "cid")
@@ -1799,7 +1738,9 @@ object Similarity {
     // eta-expansion through a lambda: pqAnnBody/ivfpqAnnBody are vals
     // declared below this map (object init order would capture null
     // otherwise)
-    "s_pq_ann" -> memoAnn("s_pq_ann")((s, dir) => pqAnnBody(s, dir)),
+    "s_pq_ann" -> ((s, dir) =>
+      graft.CacheBook.memoCheckpoint(s, "s", "ann:s_pq_ann", dir)(
+        pqAnnBody(s, dir))),
     "s_pq_recall" -> recallOf("s_pq_ann"),
 
     // PQ DISTORTION audit — the reconstruction-error half of the PQ
@@ -1838,7 +1779,9 @@ object Similarity {
     // index s_ivf_ann prices; scores from the same Lloyd-refined
     // codebook s_pq_ann prices; the recall query prices the composed
     // loss against brute force.
-    "s_ivfpq_ann" -> memoAnn("s_ivfpq_ann")((s, dir) => ivfpqAnnBody(s, dir)),
+    "s_ivfpq_ann" -> ((s, dir) =>
+      graft.CacheBook.memoCheckpoint(s, "s", "ann:s_ivfpq_ann", dir)(
+        ivfpqAnnBody(s, dir))),
     "s_ivfpq_recall" -> recallOf("s_ivfpq_ann"),
 
     // the persisted-artifact probe — what a 100 TB query session
@@ -1978,7 +1921,8 @@ object Similarity {
     // point of graph ANN at scale (IVF probes scan whole cells; the
     // walk touches only edges). Navigability on this weakly-clustered
     // corpus is priced by s_graph_search_recall against brute force.
-    "s_graph_search" -> memoAnn("s_graph_search")((s, dir) => {
+    "s_graph_search" -> ((s, dir) =>
+      graft.CacheBook.memoCheckpoint(s, "s", "ann:s_graph_search", dir) {
       val e = vecs(s, dir)
       val gexp = knnGraph(s, dir).select(col("src").as("vec_id"), col("nbr"))
       val qs = broadcast(e.filter(col("vec_id") < NQueries)
@@ -2047,7 +1991,8 @@ object Similarity {
     // from the MEMOIZED layer-0 graph by two semi-joins (no second
     // graph build). Recall priced by s_hnsw_search_recall next to the flat
     // walk — same rounds, better-seeded.
-    "s_hnsw_search" -> memoAnn("s_hnsw_search")((s, dir) => {
+    "s_hnsw_search" -> ((s, dir) =>
+      graft.CacheBook.memoCheckpoint(s, "s", "ann:s_hnsw_search", dir) {
       val e = vecs(s, dir)
       val g0 = knnGraph(s, dir).select(col("src").as("vec_id"), col("nbr"))
       val prom = e.filter(md5(col("vec_id").cast("string")) < lit(HnswPromote))
@@ -2091,7 +2036,8 @@ object Similarity {
     // the base graph builds cell-bounded like knnGraph. The delta
     // query frame broadcasts like the NQueries frame (bounded by the
     // nightly window, not the corpus).
-    "s_graph_upsert" -> memoAnn("s_graph_upsert")((s, dir) => {
+    "s_graph_upsert" -> ((s, dir) =>
+      graft.CacheBook.memoCheckpoint(s, "s", "ann:s_graph_upsert", dir) {
       val e = vecs(s, dir)
       val (tNew, _) = oldSeed(s, dir)
       val eOld = e.filter(col("vec_id") < tNew)
@@ -2279,8 +2225,8 @@ object Similarity {
       // r7 driver retry proved the explode→distinct→overlap→window
       // pipeline was re-running per call): K*NQueries rows persisted
       // once per (session, corpus), released with the "s" scope.
-      val lex = memoAnn("s_lex_topk")((s2, d2) => {
-        val dw = Tables.load(s2, d2, "documents")
+      val lex = graft.CacheBook.memoCheckpoint(s, "s", "ann:s_lex_topk", dir) {
+        val dw = Tables.load(s, dir, "documents")
           .select(col("doc_id").as("id"), explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) > 0).distinct()
         val qw = broadcast(dw.filter(col("id") < NQueries)
@@ -2290,7 +2236,7 @@ object Similarity {
         val wl = Window.partitionBy("q").orderBy(col("ov").desc, col("id").asc)
         overlap.withColumn("lex_rn", row_number().over(wl))
           .filter(col("lex_rn") <= K).select("q", "id", "lex_rn")
-      })(s, dir)
+      }
       val vec = bfTopk(s, dir)
         .select(col("q"), col("vec_id").as("id"), col("rn").as("vec_rn"))
       val fused = lex.join(vec, Seq("q", "id"), "full")
@@ -2432,8 +2378,8 @@ object Similarity {
     * paths; memoized so the two recall entries share one build. */
   private def maxSimRecallOf(annName: String): (SparkSession, String) => DataFrame =
     (s, dir) => {
-      val bf = memoAnn("maxsim_bf")((s2, d2) => {
-        val e = vecs(s2, d2)
+      val bf = graft.CacheBook.memoCheckpoint(s, "s", "ann:maxsim_bf", dir) {
+        val e = vecs(s, dir)
         val qs = broadcast(e.filter(col("vec_id") < NQueries)
           .select(col("vec_id").as("q"), col("v").as("qv")))
         val wb = Window.partitionBy("q").orderBy(col("ms").desc, col("vec_id").asc)
@@ -2443,7 +2389,7 @@ object Similarity {
           .withColumn("rn", row_number().over(wb))
           .filter(col("rn") <= K)
           .select("q", "vec_id")
-      })(s, dir)
+      }
       recallAgainst(bf, s, dir, annName)
     }
 
@@ -2451,9 +2397,6 @@ object Similarity {
     * baseline — exact integer ratio, both rankings deterministic. */
   private def recallOf(annName: String): (SparkSession, String) => DataFrame =
     (s, dir) => recallAgainst(bfTopk(s, dir).select("q", "vec_id"), s, dir, annName)
-
-  private val storeCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[String]]
 
   /** Write the (unrefined) IVF index as a standing AnnIndexStore
     * artifact once per (session, corpus) — the temp-dir stand-in for
@@ -2536,49 +2479,38 @@ object Similarity {
           bank, col("tv"), 1), 1).as("cid"))
   }
 
-  private val tokOldCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[(Long, Int, DataFrame, DataFrame)]]
-
   /** The OLD-token standing index — last night's artifact in the
     * nightly-delta convention, shared by s_tok_upsert (batch upsert)
     * and st_tok_ingest (streaming probe-on-ingest): (tNew boundary,
     * the old-population-derived K, the K-row centroid table, the
     * standing cells = old tokens assigned). Both relations persist +
     * materialize once per (session, corpus); released with "s". */
-  private[graft] def tokOldIndex(s: SparkSession, dir: String): (Long, Int, DataFrame, DataFrame) = {
-    graft.CacheBook.touch(s, "s", "tok_old")
-    synchronized { tokOldCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-      graft.CacheBook.building(s, "s", "tok_old") {
-        val e = vecs(s, dir)
-        val (tNew, _) = oldSeed(s, dir)
-        val oldToks = toksOf(e.filter(col("vec_id") < tNew))
-        // K derives from the OLD token population (the count the
-        // nightly build saw), override-aware like every draw site
-        val kOldTok = centroidOverride.map { k => overrideWarned; k }
-          .getOrElse(kFor(PqM.toLong * e.filter(col("vec_id") < tNew).count()))
-        // EAGER localCheckpoints, not persists (the item-1 plan tax):
-        // behind a persist every consumer of the standing cells
-        // (s_tok_upsert's merge, st_tok_ingest's stream-static join)
-        // re-planned and re-codegen'd the toksOf-explode + assignment
-        // subtree per action; the checkpoint truncates both relations
-        // to LogicalRDD leaves. Build shape stays auditable via the
-        // recorded build plan (PlanShapeSpec discipline).
-        val cents = graft.CacheBook.recordBuildPlan(s, "s", "tok_old")(
-          tokCentroids(oldToks, kOldTok)).localCheckpoint(true)
-        val standing = graft.CacheBook.recordBuildPlan(s, "s", "tok_old:cells")(
-          tokAssign(oldToks, cents)).localCheckpoint(true)
-        graft.CacheBook.register(s, "s", "tok_old") { () =>
-          Similarity.synchronized { tokOldCache.remove((s, dir)) }
-          graft.CacheBook.unpersistCheckpoint(cents)
-          graft.CacheBook.unpersistCheckpoint(standing)
-          ()
-        }
-        (tNew, kOldTok, cents, standing)
-      })) }.value
-  }
-
-  private val tokStoreCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[String]]
+  private[graft] def tokOldIndex(s: SparkSession,
+      dir: String): (Long, Int, DataFrame, DataFrame) =
+    graft.CacheBook.memo(s, "s", "tok_old", dir) {
+      val e = vecs(s, dir)
+      val (tNew, _) = oldSeed(s, dir)
+      val oldToks = toksOf(e.filter(col("vec_id") < tNew))
+      // K derives from the OLD token population (the count the
+      // nightly build saw), override-aware like every draw site
+      val kOldTok = centroidOverride.map { k => overrideWarned; k }
+        .getOrElse(kFor(PqM.toLong * e.filter(col("vec_id") < tNew).count()))
+      // EAGER localCheckpoints, not persists (the item-1 plan tax):
+      // behind a persist every consumer of the standing cells
+      // (s_tok_upsert's merge, st_tok_ingest's stream-static join)
+      // re-planned and re-codegen'd the toksOf-explode + assignment
+      // subtree per action; the checkpoint truncates both relations
+      // to LogicalRDD leaves. Build shape stays auditable via the
+      // recorded build plan (PlanShapeSpec discipline).
+      val cents = graft.CacheBook.recordBuildPlan(s, "s", "tok_old")(
+        tokCentroids(oldToks, kOldTok)).localCheckpoint(true)
+      val standing = graft.CacheBook.recordBuildPlan(s, "s", "tok_old:cells")(
+        tokAssign(oldToks, cents)).localCheckpoint(true)
+      (tNew, kOldTok, cents, standing)
+    } { case (_, _, cents, standing) =>
+      graft.CacheBook.unpersistCheckpoint(cents)
+      graft.CacheBook.unpersistCheckpoint(standing)
+    }
 
   /** STANDING token-level MaxSim index (the r12 "missing #2"): token
     * centroids + cid-partitioned token cells persisted through
@@ -2592,49 +2524,32 @@ object Similarity {
     * (priced in s_index_build), and s_tok_upsert extends it with a
     * delta batch. Cells carry (vec_id, v = the 8-dim token slice,
     * n = its norm, cid), so in-cell scoring needs no corpus join. */
-  private def tokIndexPath(s: SparkSession, dir: String): String = {
-    graft.CacheBook.touch(s, "s", "tok_index")
-    synchronized {
-      tokStoreCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-        graft.CacheBook.building(s, "s", "tok_index") {
-          val toks = toksOf(vecs(s, dir))
-          val cents = tokCentroids(toks, nCentroidsTok(s, dir))
-            .withColumn("cn", sqrt(subDot(col("cv"), col("cv"))))
-          val cells = tokAssign(toks, cents.select("cid", "cv"))
-          val path = java.nio.file.Files.createTempDirectory("graft-tok-store").toString
-          graft.sources.AnnIndexStore.write(path, cents, cells)
-          graft.CacheBook.register(s, "s", "tok_index") { () =>
-            Similarity.synchronized { tokStoreCache.remove((s, dir)) }
-            val p = new org.apache.hadoop.fs.Path(path)
-            p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-            ()
-          }
-          path
-        })) }.value
-  }
+  private def tokIndexPath(s: SparkSession, dir: String): String =
+    graft.CacheBook.memo(s, "s", "tok_index", dir) {
+      val toks = toksOf(vecs(s, dir))
+      val cents = tokCentroids(toks, nCentroidsTok(s, dir))
+        .withColumn("cn", sqrt(subDot(col("cv"), col("cv"))))
+      val cells = tokAssign(toks, cents.select("cid", "cv"))
+      val path = java.nio.file.Files.createTempDirectory("graft-tok-store").toString
+      graft.sources.AnnIndexStore.write(path, cents, cells)
+      path
+    }(deleteStore(s))
 
-  private def ivfStorePath(s: SparkSession, dir: String): String = {
-    graft.CacheBook.touch(s, "s", "ivf_store")
-    synchronized {
-    storeCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def ivfStorePath(s: SparkSession, dir: String): String =
+    graft.CacheBook.memo(s, "s", "ivf_store", dir) {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val path = java.nio.file.Files.createTempDirectory("graft-ivf-store").toString
       graft.sources.AnnIndexStore.write(path, cents, assigned)
-      graft.CacheBook.register(s, "s", "ivf_store") { () =>
-        Similarity.synchronized { storeCache.remove((s, dir)) }
-        // Hadoop delete, not java.io: the store path is a filesystem
-        // URI in production (hdfs://, s3a://)
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        ()
-      }
       path
-    }))
-  }.value
-  }
+    }(deleteStore(s))
 
-  private val ivfCache = collection.mutable
-    .Map.empty[(SparkSession, String, Boolean), graft.Once[(DataFrame, DataFrame)]]
+  /** Release of a standing-artifact memo. Hadoop delete, not java.io:
+    * the store path is a filesystem URI in production (hdfs://, s3a://). */
+  private def deleteStore(s: SparkSession)(path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
 
   /** Build-once half of the IVF index: (centroid table (cid, cv, cn),
     * cell-assigned vector table (vec_id, v, n, cid)). Persist both with
@@ -2648,10 +2563,8 @@ object Similarity {
     * the same assignment — in one session the O(N*K) build runs once,
     * not three times. */
   def buildIvfIndex(s: SparkSession, dir: String,
-      refine: Boolean = false): (DataFrame, DataFrame) = {
-    graft.CacheBook.touch(s, "s", s"ivf:$refine")
-    synchronized {
-    ivfCache.getOrElseUpdate((s, dir, refine), new graft.Once(() => {
+      refine: Boolean = false): (DataFrame, DataFrame) =
+    graft.CacheBook.memo(s, "s", s"ivf:$refine", dir) {
       val e = vecs(s, dir)
       val seed = e
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
@@ -2681,16 +2594,12 @@ object Similarity {
           element_at(graft.functions.NearestCentroids.nearest(
             bank, col("v"), 1, col("n")), 1).as("cid")))
         .localCheckpoint(true)
-      graft.CacheBook.register(s, "s", s"ivf:$refine") { () =>
-        Similarity.synchronized { ivfCache.remove((s, dir, refine)) }
-        graft.CacheBook.unpersistCheckpoint(assigned)
-        graft.CacheBook.unpersistCheckpoint(cents0)
-        ()
-      }
       (cents, assigned)
-    }))
-  }.value
-  }
+    } { case (cents, assigned) =>
+      // the broadcast hint wraps cents0's checkpointed leaf
+      graft.CacheBook.unpersistCheckpoint(assigned)
+      graft.CacheBook.unpersistCheckpoint(cents)
+    }
 
   /** Query-many half: probe the NProbe nearest cells per query, exact
     * search within. `cents`/`assigned` may be freshly built or reloaded
@@ -2706,9 +2615,6 @@ object Similarity {
           VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos")))
   }
 
-  private val seedCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[(Long, DataFrame)]]
-
   /** The nightly-delta convention shared by s_ivf_upsert and the
     * streaming probe-on-ingest (st_ann_ingest): new batch = last 20%
     * of vec_ids, standing centroid draw sees only pre-batch vectors.
@@ -2716,9 +2622,8 @@ object Similarity {
     * — its lineage is a full-corpus md5 sort that every broadcast
     * consumer (probe, old assignment, delta assignment) would
     * otherwise re-run (the buildIvfIndex cents0 discipline). */
-  private[graft] def oldSeed(s: SparkSession, dir: String): (Long, DataFrame) = {
-    graft.CacheBook.touch(s, "s", "old_seed")
-    synchronized { seedCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private[graft] def oldSeed(s: SparkSession, dir: String): (Long, DataFrame) =
+    graft.CacheBook.memo(s, "s", "old_seed", dir) {
       val e = vecs(s, dir)
       val tNew = e.agg(max("vec_id")).head().getLong(0) * 4 / 5
       // the standing index predates the batch, so its K derives from
@@ -2733,14 +2638,8 @@ object Similarity {
           .limit(kOld)
           .select(col("vec_id").as("cid"), col("v").as("cv"), col("n").as("cn")))
         .localCheckpoint(true)
-      graft.CacheBook.register(s, "s", "old_seed") { () =>
-        Similarity.synchronized { seedCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(seed)
-        ()
-      }
       (tNew, seed)
-    })) }.value
-  }
+    } { case (_, seed) => graft.CacheBook.unpersistCheckpoint(seed) }
 
   /** Assign a vector frame to a standing centroid table (argmax cosine,
     * cid tie-break) — the per-vector-independent kernel shared by the
@@ -2796,10 +2695,6 @@ object Similarity {
   // O(N * M * Ksub) against a constant broadcast; scoring is a linear
   // scan of the code table (compose with IVF cells for sub-linear
   // search — this query prices the PQ term alone).
-  private val pqCache = collection.mutable
-    .Map.empty[(SparkSession, String),
-      graft.Once[(DataFrame, DataFrame, DataFrame)]]
-
   /** PQ model pieces — (per-vector codes, per-query integer micro
     * LUT, refined codebook) — shared by s_pq_ann (full code-table
     * scan), s_ivfpq_ann (scoring restricted to the IVF-probed cells)
@@ -2808,9 +2703,8 @@ object Similarity {
     * family scope: the Lloyd loop + encoding is the expensive half of
     * every PQ query. */
   private def pqModel(s: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.CacheBook.touch(s, "s", "pq_model")
-    synchronized { pqCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+      dir: String): (DataFrame, DataFrame, DataFrame) =
+    graft.CacheBook.memo(s, "s", "pq_model", dir) {
       val (codes, lut, cb) = pqModelBody(s, dir)
       // EAGER localCheckpoints, not persists (the item-1 plan tax):
       // the codes/LUT lineage is the whole Lloyd loop + encoding, and
@@ -2821,20 +2715,17 @@ object Similarity {
         codes).localCheckpoint(true)
       val lutP = graft.CacheBook.recordBuildPlan(s, "s", "pq_model:lut")(
         lut).localCheckpoint(true)
-      graft.CacheBook.register(s, "s", "pq_model") { () =>
-        Similarity.synchronized { pqCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(codesP)
-        graft.CacheBook.unpersistCheckpoint(lutP)
-        ()
-      }
       // cb is a broadcast-literal-sized frame (PqM*PqKsub rows) that
       // the two persisted relations already embody — no third persist
       (codesP, lutP, cb)
-    })) }.value
-  }
+    } { case (codesP, lutP, _) =>
+      graft.CacheBook.unpersistCheckpoint(codesP)
+      graft.CacheBook.unpersistCheckpoint(lutP)
+    }
 
   private def pqModelBody(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
+      import s.implicits._
       val e = vecs(s, dir)
       val wDraw = Window.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       val trainers = e
@@ -2857,10 +2748,12 @@ object Similarity {
       // order, ties break code-asc as the window did). The former join
       // + window materialized and sorted 8N×Ksub rows per encode pass —
       // and the Lloyd rounds nested those plans.
-      def encodeWith(codebook: DataFrame): DataFrame = {
+      def rowsOf(codebook: DataFrame): Seq[(Int, Int, Seq[Double])] =
+        codebook.select("m", "code", "csub").collect().toSeq.map(r =>
+          (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
+      def encodeWith(rows: Seq[(Int, Int, Seq[Double])]): DataFrame = {
         val bank = graft.functions.NearestCentroids.l2Banks(
-          codebook.select("m", "code", "csub").collect().toSeq.map(r =>
-            (r.getInt(0), r.getInt(1).toLong, r.getSeq[Double](2).toArray)))
+          rows.map { case (m, code, csub) => (m, code.toLong, csub.toArray) })
         ex.select(col("vec_id"), col("m"),
           element_at(graft.functions.NearestCentroids.nearest(
             bank, col("xsub"), 1, lit(1.0), col("m")), 1)
@@ -2872,18 +2765,28 @@ object Similarity {
       // every sub-vector to its nearest code by L2, recompute each
       // sub-centroid as its cell's mean. The hash-draw seed gives the
       // plan shape; these rounds give it the actual data distribution.
+      // A code no sub-vector chose this round (duplicate vectors tie to
+      // the lowest code) keeps its previous centroid: the new means
+      // left-join onto the previous codebook, so every bank stays
+      // PqKsub wide. The previous codebook joins as the driver rows the
+      // encode already collected, so round plans do not nest.
+      var rows = rowsOf(cb)
       for (_ <- 0 until LloydIters) {
-        val means = encodeWith(cb)
+        val means = encodeWith(rows)
           .select(col("m"), col("code"), posexplode(col("xsub")).as(Seq("pos", "x")))
           .groupBy("m", "code", "pos")
           .agg((sum(floor(col("x") * lit(1000000.0))).cast("double")
             / (count(lit(1)) * lit(1000000.0))).as("comp"))
-        cb = broadcast(means.groupBy("m", "code")
+        val moved = means.groupBy("m", "code")
           .agg(transform(array_sort(collect_list(struct(col("pos"), col("comp")))),
-            p => p.getField("comp")).as("csub")))
+            p => p.getField("comp")).as("csub"))
+        cb = broadcast(rows.toDF("m", "code", "prev")
+          .join(broadcast(moved), Seq("m", "code"), "left")
+          .select(col("m"), col("code"), coalesce(col("csub"), col("prev")).as("csub")))
+        rows = rowsOf(cb)
       }
       // encode: nearest sub-centroid per (vector, subspace)
-      val codes = encodeWith(cb).select("vec_id", "m", "code")
+      val codes = encodeWith(rows).select("vec_id", "m", "code")
       // ADC lookup table: per (query, subspace, code) integer micro-dot
       val lut = broadcast(e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), explode(array(exSubs: _*)).as("x"))
@@ -2966,7 +2869,7 @@ object Similarity {
     * and s_graph_rank, and fanned into s_index_build's build list so the
     * graph consumers price probe-only cost, not a hidden build. */
   private def knnGraph(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_knn_graph")((s2, d2) => knnGraphBody(s2, d2))(s, dir)
+    graft.CacheBook.memoCheckpoint(s, "s", "ann:s_knn_graph", dir)(knnGraphBody(s, dir))
 
   /** Memoized STANDING graph for the upsert path: the knnGraphBody
     * shape restricted to the pre-batch corpus, with the cells drawn
@@ -2977,9 +2880,9 @@ object Similarity {
     * graph the search entries walk; this is the graph that EXISTED
     * before tonight's batch, which the upsert extends. */
   private def knnBase(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_knn_base")((s2, d2) => {
-      val (tNew, seed) = oldSeed(s2, d2)
-      val eOld = vecs(s2, d2).filter(col("vec_id") < tNew)
+    graft.CacheBook.memoCheckpoint(s, "s", "ann:s_knn_base", dir) {
+      val (tNew, seed) = oldSeed(s, dir)
+      val eOld = vecs(s, dir).filter(col("vec_id") < tNew)
       // constant-bank top-NProbe expression — see [[collectCosineBank]]
       val probes = eOld.select(col("vec_id").as("src"), col("v").as("qv"),
         col("n").as("qn"),
@@ -2994,17 +2897,17 @@ object Similarity {
         .withColumn("rn", row_number().over(wk))
         .filter(col("rn") <= KnnK)
         .select("src", "nbr", "cos")
-    })(s, dir)
+    }
 
   /** Memoized edges⋈deg relation behind s_graph_rank: one deg
     * aggregation per session, persisted, released with the "s" scope.
     * Built in s_index_build's fan-out (it forces [[knnGraph]] too), so
     * the rank query's cost is RankIters join+agg rounds, nothing else. */
   private def graphEd(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_graph_ed")((s2, d2) => {
-      val edges = knnGraph(s2, d2).select("src", "nbr")
+    graft.CacheBook.memoCheckpoint(s, "s", "ann:s_graph_ed", dir) {
+      val edges = knnGraph(s, dir).select("src", "nbr")
       edges.join(edges.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-    })(s, dir)
+    }
 
   /** Memoized canonical UNDIRECTED KNN edge list (u < w) — round 14
     * OPT: s_triangle_count, s_modularity, s_link_pred and
@@ -3012,20 +2915,20 @@ object Similarity {
     * relation (four resident duplicates, four canonical projections);
     * one checkpointed memo per (session, corpus) serves all four. */
   private def knnUnd(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_knn_und")((s2, d2) => graft.operators.TriangleCount
-      .canonical(knnGraph(s2, d2).select("src", "nbr")))(s, dir)
+    graft.CacheBook.memoCheckpoint(s, "s", "ann:s_knn_und", dir)(
+      graft.operators.TriangleCount.canonical(knnGraph(s, dir).select("src", "nbr")))
 
   /** Memoized per-node degree over [[knnUnd]] — s_link_pred's jaccard
     * denominators and the Adamic–Adar wedge weights read the same
     * relation. Identical to grouping the bidirectional edge expansion:
     * each undirected edge contributes one u- and one w-appearance. */
   private def knnUndDeg(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_knn_und_deg")((s2, d2) => {
-      val und = knnUnd(s2, d2)
+    graft.CacheBook.memoCheckpoint(s, "s", "ann:s_knn_und_deg", dir) {
+      val und = knnUnd(s, dir)
       und.select(col("u").as("src"))
         .unionByName(und.select(col("w").as("src")))
         .groupBy("src").agg(count(lit(1)).as("deg"))
-    })(s, dir)
+    }
 
   /** Memoized 2-hop wedge aggregate (a, b, common, aa_ppm), a < b —
     * round 14 OPT: s_link_pred and s_adamic_adar each ran the SAME
@@ -3037,11 +2940,11 @@ object Similarity {
     * preserves wedge rows exactly; aa_ppm = the degree-weighted sum).
     * Wedge work stays degree-bounded (O(N·deg²) on the KnnK graph). */
   private def wedgeAgg(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_wedge_agg")((s2, d2) => {
-      val und = knnUnd(s2, d2)
+    graft.CacheBook.memoCheckpoint(s, "s", "ann:s_wedge_agg", dir) {
+      val und = knnUnd(s, dir)
       val ed = und.select(col("u").as("src"), col("w").as("nbr"))
         .unionByName(und.select(col("w").as("src"), col("u").as("nbr")))
-      val deg = knnUndDeg(s2, d2)
+      val deg = knnUndDeg(s, dir)
       ed.as("e1").join(ed.as("e2"),
           col("e1.nbr") === col("e2.src") && col("e1.src") < col("e2.nbr"))
         .select(col("e1.src").as("a"), col("e1.nbr").as("z"),
@@ -3052,19 +2955,19 @@ object Similarity {
           (least(col("deg"), lit(64L)) - 1).cast("int")))
         .groupBy("a", "b")
         .agg(count(lit(1)).as("common"), sum("w").as("aa_ppm"))
-    })(s, dir)
+    }
 
   /** Memoized LPA community labels — the LabelProp trajectory runs
     * once per session; s_label_prop reads the communities and
     * s_modularity scores the same partition (two consumers of one
     * loop, the stars_labels discipline). */
   private def lpaLabels(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_lpa_labels")((s2, d2) => {
+    graft.CacheBook.memoCheckpoint(s, "s", "ann:s_lpa_labels", dir) {
       val und = graft.operators.TriangleCount
-        .canonical(knnGraph(s2, d2).select("src", "nbr"))
+        .canonical(knnGraph(s, dir).select("src", "nbr"))
       graft.operators.LabelProp.run(und, LpaIters,
-        thunk => graft.CacheBook.register(s2, "s")(thunk))
-    })(s, dir)
+        thunk => graft.CacheBook.register(s, "s")(thunk))
+    }
 
   private val ivfpqAnnBody: (SparkSession, String) => DataFrame = ((s, dir) => {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)

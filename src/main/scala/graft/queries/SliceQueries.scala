@@ -25,26 +25,12 @@ object SliceQueries {
     * per (session, dir) and the persisted key sets are shared (the keys
     * are already cached DataFrames, so this memo only avoids re-running
     * the BFS actions, it holds no row data). */
-  private val custSlices =
-    collection.mutable.Map.empty[(SparkSession, String), graft.operators.SliceResult]
-  private def custSlice(s: SparkSession, dir: String): graft.operators.SliceResult = {
-    graft.CacheBook.touch(s, "slice", "cust_slice")
-    custSlices.synchronized {
-      custSlices.getOrElseUpdate((s, dir), {
-        // evicted together with the Slicer-registered key frames: after a
-        // "slice"-scope release the compacted checkpoints are gone, so a
-        // stale SliceResult handle must not survive the frames it wraps
-        graft.CacheBook.register(s, "slice", "cust_slice")(() =>
-          { custSlices.synchronized { custSlices.remove((s, dir)) }; () })
-        // building(...): the Slicer's per-run anonymous key-frame
-        // registrations attach to this memo's name, so a clean-retry
-        // releaseNamed frees the frames WITH the stale SliceResult
-        graft.CacheBook.building(s, "slice", "cust_slice") {
-          slicer(s, dir).run(custRoots)
-        }
-      })
-    }
-  }
+  private def custSlice(s: SparkSession, dir: String): graft.operators.SliceResult =
+    // the Slicer's per-run anonymous key-frame registrations attach to
+    // this memo's name, so a release frees the frames WITH the
+    // SliceResult that wraps them (a stale handle must not survive them)
+    graft.CacheBook.memo(s, "slice", "cust_slice", dir)(
+      slicer(s, dir).run(custRoots))(_ => ())
   // DuckDB mirrors of each hop of the custRoots discovery
   private val custSql = "SELECT c_custkey FROM customer WHERE c_custkey % 50 = 7"
   private val ordSql  = s"SELECT o_orderkey FROM orders WHERE o_custkey IN ($custSql)"

@@ -58,87 +58,62 @@ object TextAnalysis {
              len(list_filter(w, x -> x IN ('le','et','les')))) AS g
          FROM (SELECT *, string_split(text, ' ') AS w FROM documents))"""
 
-  /** Memoize a text-family one-time build per (session, corpus) —
-    * persisted MEMORY_AND_DISK, materialized once, released with the
-    * "x" family scope (the memoAnn pattern). x_build prices these
-    * builds explicitly so the probe queries that reuse them measure
-    * probe cost, not whichever build they touch first. */
-  private val xCache = collection.mutable
-    .Map.empty[(SparkSession, String, String), graft.Once[DataFrame]]
-  private def memoX(name: String)(
-      body: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => {
-      graft.CacheBook.touch(s, "x", s"x:$name")
-      TextAnalysis.synchronized {
-        xCache.getOrElseUpdate((s, dir, name), new graft.Once(() =>
-          graft.CacheBook.building(s, "x", s"x:$name") {
-          // EAGER localCheckpoint, not persist (round 14): a persisted
-          // memo keeps its plan, so every consumer re-plans and
-          // re-codegens the build subtree (the memoAnn Janino finding);
-          // the checkpoint truncates it to a LogicalRDD leaf.
-          val r = graft.CacheBook.recordBuildPlan(s, "x", s"x:$name")(
-            body(s, dir)).localCheckpoint(true)
-          graft.CacheBook.register(s, "x", s"x:$name") { () =>
-            TextAnalysis.synchronized { xCache.remove((s, dir, name)) }
-            graft.CacheBook.unpersistCheckpoint(r)
-            ()
-          }
-          r
-        }))
-      }.value
-    }
+  // Text-family one-time builds are "x:<name>" memos
+  // (CacheBook.memoCheckpoint) per (session, corpus), released with the
+  // "x" family scope. x_build prices these builds explicitly so the
+  // probe queries that reuse them measure probe cost, not whichever
+  // build they touch first.
 
   /** Corpus bigram occurrences — BOTH sides of x_lm_score's salted
     * count join consume this relation. */
-  private def lmGrams: (SparkSession, String) => DataFrame = memoX("lm_grams") {
-    (s, dir) =>
+  private def lmGrams(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memoCheckpoint(s, "x", "x:lm_grams", dir) {
       docs(s, dir).repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), explode(shingles(wordsCol, 2)).as("bg"))
-  }
+    }
 
   /** Per-doc LM-score accumulators (doc_id, nb, sx) — the salted
     * Zipf-skewed bigram-count join (count side replicates 8-fold like
     * x_top_terms' df join; never broadcast — the bigram table grows
     * with the corpus) runs ONCE per (session, corpus): x_lm_score and
     * x_ccnet_buckets both read this relation; x_build prices it. */
-  private def lmScores: (SparkSession, String) => DataFrame = memoX("lm_scores") {
-    (s, dir) =>
+  private def lmScores(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memoCheckpoint(s, "x", "x:lm_scores", dir) {
       val grams = lmGrams(s, dir)
       val cnt = grams.groupBy("bg").agg(count(lit(1)).as("c"))
       graft.operators.SkewJoin.salted(grams, cnt, key = "bg", uniqueCol = "doc_id")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("nb"), sum(expr("1000000 div c")).as("sx"))
-  }
+    }
 
   /** (doc_id, 48-bit span hash) stride-1 windows — x_dup_spans' probe
     * and df sides. */
-  private def spanRel: (SparkSession, String) => DataFrame = memoX("spans") {
-    (s, dir) =>
+  private def spanRel(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memoCheckpoint(s, "x", "x:spans", dir) {
       docs(s, dir).repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), explode(shingleHashes(wordsCol, SpanW)).as("span"))
-  }
+    }
 
   /** (doc_id, pos, line) segments — x_line_dedup's probe and df sides. */
-  private def lineRel: (SparkSession, String) => DataFrame = memoX("lines") {
-    (s, dir) => linesOf(docs(s, dir))
-  }
+  private def lineRel(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memoCheckpoint(s, "x", "x:lines", dir)(linesOf(docs(s, dir)))
 
   /** Encoded distinct-word vocab (word -> token count under the learned
     * merges) — x_bpe_encode's salted join side; forces bpeMerges. */
-  private def bpeWtok: (SparkSession, String) => DataFrame = memoX("bpe_wtok") {
-    (s, dir) =>
+  private def bpeWtok(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memoCheckpoint(s, "x", "x:bpe_wtok", dir) {
       bpeWordTokens(
         docs(s, dir).select(explode(wordsCol).as("w"))
           .filter(length(col("w")) > 0).distinct(),
         bpeMerges(s, dir))
-  }
+    }
 
   /** Per-doc DSIR importance scores (doc_id, n_feats, dsir_micro) —
     * the x_dsir gate reads it and x_dsir_sample draws from it, so the
     * hashed-feature explode + weight build runs once per (session,
     * corpus); priced by x_build's fan-out like the other memos. */
-  private def dsirScores: (SparkSession, String) => DataFrame = memoX("dsir") {
-    (s, dir) =>
+  private def dsirScores(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memoCheckpoint(s, "x", "x:dsir", dir) {
       // EAGER localCheckpoint, not persist (the item-1/11 plan-tax, one
       // more instance found by stage attribution this session: behind a
       // persist both in-build consumers — the fused bucket counts and
@@ -152,7 +127,7 @@ object TextAnalysis {
             .as("h"))
         .select(col("doc_id"), pmod(col("h"), lit(DsirBuckets.toLong)).as("b"))
         .localCheckpoint(true)
-      graft.CacheBook.register(s, "x", "x:dsir")(() =>
+      graft.CacheBook.register(s, "x")(() =>
         graft.CacheBook.unpersistCheckpoint(feats))
       // ONE pass over the feature relation serves BOTH sides' bucket
       // counts (was: two full groupBy passes, one per side — measured
@@ -190,7 +165,7 @@ object TextAnalysis {
         .select(col("doc_id"), col("nf").cast("int").as("n_feats"),
           expr("""(CAST(swq AS DECIMAL(38,0)) * 1000000000
             + CAST(swr AS DECIMAL(38,0))) div nf""").as("dsir_micro"))
-  }
+    }
 
   /** Strided word windows as ONE codegen loop per row — spec-identical
     * to `transform(sequence(...), i => concat_ws(" ", slice(words,
@@ -271,8 +246,8 @@ object TextAnalysis {
       val lsF = Future(lmScores(s, dir).count())
       // the qclf scorer memo joined the family in round 14 (x_qclf and
       // x_qclf_auc share it) — force it on the fan-out too so x_qclf
-      // prices a probe, not the hashed-ngram build; memoX materializes
-      // eagerly, so no count (and no output row) is needed
+      // prices a probe, not the hashed-ngram build; the memo
+      // checkpoints eagerly, so no count (and no output row) is needed
       val qcF = Future { qclfScored(s, dir); () }
       val (nBg, nSp, nLn, nBp, nDs, nLs) = (
         Await.result(bgF, Duration.Inf), Await.result(spF, Duration.Inf),
@@ -1223,8 +1198,8 @@ object TextAnalysis {
     * (~8 cpu-s apiece, the two entries' whole cost); the scorer now
     * materializes once per (session, corpus) and the eval reads the
     * |docs|-row checkpoint. */
-  private def qclfScored: (SparkSession, String) => DataFrame =
-    memoX("qclf_scored") { (s, dir) =>
+  private def qclfScored(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memoCheckpoint(s, "x", "x:qclf_scored", dir) {
       docs(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"),
@@ -1346,20 +1321,9 @@ object TextAnalysis {
     * the k iterated argmax jobs once. The cell holds a driver-side Seq
     * (metadata, like the argmax rows it came from), so release is just
     * the map entry. */
-  private val bpeMemo = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[Seq[(String, String, Long)]]]
-  private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String, Long)] = {
-    graft.CacheBook.touch(s, "x", "bpe_merges")
-    TextAnalysis.synchronized {
-      bpeMemo.getOrElseUpdate((s, dir), {
-        graft.CacheBook.register(s, "x", "bpe_merges") { () =>
-          TextAnalysis.synchronized { bpeMemo.remove((s, dir)) }
-          ()
-        }
-        new graft.Once(() => graft.operators.BpeVocab.learn(docs(s, dir), "text", 10))
-      })
-    }.value
-  }
+  private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String, Long)] =
+    graft.CacheBook.memo(s, "x", "bpe_merges", dir)(
+      graft.operators.BpeVocab.learn(docs(s, dir), "text", 10))(_ => ())
 
   /** Separator character wrapping each BPE symbol in the string-encoded
     * form — absent from the corpus, so replace() on the wrapped pair

@@ -54,7 +54,7 @@ class AnnIndexStoreSpec extends SparkSpec {
       "on re-call, so recall evals join cached frames") {
     val a = Similarity.queries("s_lsh_ann")(spark, dir)
     val b = Similarity.queries("s_lsh_ann")(spark, dir)
-    assert(a eq b, "memoAnn must return the same persisted frame")
+    assert(a eq b, "the ANN memo must return the same checkpointed frame")
     CacheBook.release(spark, "s")
     val c = Similarity.queries("s_lsh_ann")(spark, dir)
     assert(!(a eq c), "release must evict the memo so a rebuild happens")
